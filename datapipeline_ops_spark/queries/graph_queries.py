@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from datapipeline_ops_spark.core.registry import query
-from datapipeline_ops_spark.operators.dedup import CC_SMALL_GRAPH_EDGES
+from datapipeline_ops_spark.operators.dedup import CC_SMALL_GRAPH_EDGES, bounded_collect
 from datapipeline_ops_spark.tables import load_table, local_frame
 
 PAGERANK_ITERS = 5
@@ -291,13 +291,8 @@ def triangle_copurchase_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pays 3 aggregation jobs plus a two-join cubic stage whose fixed
         # cost dominates on a bounded graph. Above the cap the distributed
         # node-iterator census below runs unchanged on the persisted edges.
-        # Probe + collect are ONE bounded Arrow job (r15, the r14 ADVICE
-        # item): CollectLimit takes incrementally (no GlobalLimit shuffle,
-        # no second probe job) and the Arrow batch caps driver memory at
-        # ~16 B/edge — never cap+1 Python Row objects (a count-first probe
-        # measured +0.3-0.5 s per query on the under-cap path).
-        head = edges.limit(CC_SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= CC_SMALL_GRAPH_EDGES:
+        head = bounded_collect(edges, CC_SMALL_GRAPH_EDGES)
+        if head is not None:
             return _triangle_local(
                 spark,
                 list(zip(head.column("pa").to_pylist(),
@@ -450,12 +445,9 @@ def bfs_reach_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # BFS runs driver-local — the distributed loop's per-hop eager
         # checkpoint jobs' fixed cost dominates on a bounded frontier.
         # Above the cap the per-hop frontier joins below run unchanged on
-        # the persisted edges. Probe + collect are ONE bounded Arrow job
-        # (r15, the r14 ADVICE item): CollectLimit takes incrementally and
-        # the Arrow batch caps driver memory at ~16 B/edge — never cap+1
-        # Python Row objects.
-        head = edges.limit(CC_SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= CC_SMALL_GRAPH_EDGES:
+        # the persisted edges.
+        head = bounded_collect(edges, CC_SMALL_GRAPH_EDGES)
+        if head is not None:
             return _bfs_local(
                 spark,
                 list(zip(head.column("src").to_pylist(),

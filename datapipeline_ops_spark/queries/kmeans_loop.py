@@ -56,7 +56,7 @@ Design (Lloyd, squared-L2):
   persist/checkpoint-chained forms of this loop measured ~29 s and ~14 s
   wall for a 0.2 s data problem; this form runs ~3 s). Plain-Python
   state can't ride sameSemantics, so the loop memoizes per
-  (session, sf_dir) — the _bpe_run_loop precedent — and apply never
+  (session, sf_dir) through operators.dedup.memo and apply never
   retrains.
 - Lloyd guarantees inertia(stage i+1) <= inertia(stage i) in exact
   arithmetic; 6-dp centroid rounding perturbs it by <= N*dim*(5e-7)^2
@@ -78,7 +78,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from datapipeline_ops_spark.core.registry import query
 from datapipeline_ops_spark.functions.vectors import as_double, sqdist, sql_sqdist
-from datapipeline_ops_spark.operators.dedup import persist_barrier
+from datapipeline_ops_spark.operators.dedup import (
+    bounded_collect,
+    clear_barriers,
+    memo,
+    persist_barrier,
+)
 from datapipeline_ops_spark.queries.similarity import _V_CTE, EMB_DIM, IVF_CENTROIDS
 from datapipeline_ops_spark.tables import load_table, local_frame
 
@@ -89,7 +94,8 @@ _KM_ITERS = 5
 def _km_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return persist_barrier(
-        e.select("vec_id", as_double(F.col("embedding")).alias("vec")), "km_v"
+        e.select("vec_id", as_double(F.col("embedding")).alias("vec")),
+        f"km_v:{sf_dir}",
     )
 
 
@@ -135,16 +141,9 @@ def _km_best(vec_col, cents_col):
     )
 
 
-# Session-scoped memo for the trained Lloyd state (the _bpe_run_loop
-# precedent): the trained state is plain Python (centroid dicts + collected
-# stage stats), which can't ride sameSemantics, so cross-query reuse needs
-# an explicit memo. Keyed by (applicationId, sf_dir); cleared by
-# clear_barriers() so bench repeats stay cold.
-_KM_MEMO: dict = {}
-
-
-def _km_memo_clear() -> None:
-    _KM_MEMO.clear()
+# Name kept for callers that reset the trained-state memo (operators.dedup.
+# memo); it clears every barrier too.
+_km_memo_clear = clear_barriers
 
 
 # Adaptive-strategy cap (r15 optimization, the CC_SMALL_GRAPH_EDGES /
@@ -154,9 +153,9 @@ def _km_memo_clear() -> None:
 # measured crossover, not a bench constant: the numpy column-fold loop
 # walks 6 stages over 100k x 64 doubles in ~0.8 s (51 MB collected), while
 # the distributed loop's fixed cost (7 sequential jobs + per-stage literal
-# spines) is ~3 s on local[32] regardless of data size. Probing is
-# collect-free (a plain count on the persisted projection), so the
-# above-cap path never ships rows to the driver (the r14 ADVICE item).
+# spines) is ~3 s on local[32] regardless of data size. The probe is
+# bounded_collect: one Arrow job that ships at most cap+1 rows, so the
+# above-cap path never ships more than that to the driver.
 _KM_DRIVER_ROWS_CAP = 100_000
 
 _KM_STATS_SCHEMA = "iter int, inertia double, n_active long, n_moved long"
@@ -406,19 +405,13 @@ def _km_run(spark: SparkSession, sf_dir: str):
     Arrow-collected matrix; above it the fused distributed loop runs and
     the rollup slot is None (the applies then run their corpus-scale
     Spark passes)."""
-    from datapipeline_ops_spark.operators.dedup import register_clear_hook
+    return memo(spark, "km_run", sf_dir, lambda: _km_train(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KM_MEMO.get(key)
-    if hit is not None:
-        return hit
-    register_clear_hook(_km_memo_clear)
+
+def _km_train(spark: SparkSession, sf_dir: str):
     v = _km_v(spark, sf_dir)
-    # probe + collect are ONE bounded Arrow job (the r14 ADVICE item):
-    # CollectLimit takes incrementally, and the batch bounds driver memory
-    # at <= (cap+1) x dim doubles columnar — never Python Row objects
-    tbl = v.limit(_KM_DRIVER_ROWS_CAP + 1).toArrow()
-    if tbl.num_rows <= _KM_DRIVER_ROWS_CAP and _km_arrow_clean(tbl):
+    tbl = bounded_collect(v, _KM_DRIVER_ROWS_CAP)
+    if tbl is not None and _km_arrow_clean(tbl):
         ids = tbl.column("vec_id").to_pylist()
         if tbl.num_rows:
             flat = (
@@ -429,12 +422,9 @@ def _km_run(spark: SparkSession, sf_dir: str):
             rows = [(ids[i], mat[i]) for i in range(tbl.num_rows)]
         else:
             rows = []
-        result = _km_driver_lloyd(rows)
-    else:
-        cents, stage_vals = _km_dist_loop(spark, v)
-        result = (cents, stage_vals, None)
-    _KM_MEMO[key] = result
-    return result
+        return _km_driver_lloyd(rows)
+    cents, stage_vals = _km_dist_loop(spark, v)
+    return cents, stage_vals, None
 
 
 def _km_ctes() -> tuple[list[str], list[str]]:

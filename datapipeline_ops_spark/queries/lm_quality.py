@@ -23,6 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from datapipeline_ops_spark.core.registry import query
 from datapipeline_ops_spark.functions.hashing import hash64, sql_hash64
 from datapipeline_ops_spark.functions.text import tokens
+from datapipeline_ops_spark.operators.dedup import (
+    bounded_collect,
+    clear_barriers,
+    memo,
+    persist_barrier,
+)
 from datapipeline_ops_spark.tables import load_table, local_frame
 
 # ---------------------------------------------------------------------------
@@ -403,8 +409,6 @@ def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ORDER BY doc_id` window would force. The persist barrier pins the
     range partitioner's sampled boundaries so pid assignment is computed
     once."""
-    from datapipeline_ops_spark.operators.dedup import persist_barrier
-
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tok"))
     ranked = persist_barrier(
@@ -1066,24 +1070,14 @@ def train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stage_rows
 
 
-# Session-scoped memo for the trained GD trajectory (the _km_run
-# precedent): stage weights are driver-held floats embedded as literals,
-# so each stage is exactly ONE partial-aggregated job over the persisted
-# feature table — the frame-chained form paid per-stage persists,
-# broadcast builds and Catalyst re-analysis that dominated the wall at
-# every scale factor. Keyed by (applicationId, sf_dir); cleared by
-# clear_barriers() so bench repeats stay cold.
-_QCT_MEMO: dict = {}
-# INVALIDATION CONTRACT (r14 ADVICE): _QCT_MEMO holds handles to
-# persist_barrier-backed frames, so it must only ever be invalidated
-# through clear_barriers() (which runs the registered hook below AND
-# unpersists the barrier blocks together). Unpersisting a "qct_*" barrier
-# directly — or catalog.clearCache() — would leave the memo returning
-# handles to silently-uncached frames (the _BARRIERS docstring's warning).
-
-
-def _qct_memo_clear() -> None:
-    _QCT_MEMO.clear()
+# The trained GD trajectory is memoized per (session, sf_dir) through
+# operators.dedup.memo (the _km_run precedent): stage weights are
+# driver-held floats embedded as literals, so each stage is exactly ONE
+# partial-aggregated job over the persisted feature table — the
+# frame-chained form paid per-stage persists, broadcast builds and
+# Catalyst re-analysis that dominated the wall at every scale factor.
+# Name kept for callers that reset the memo; it clears every barrier too.
+_qct_memo_clear = clear_barriers
 
 
 def _dlit(x):
@@ -1101,13 +1095,10 @@ def _qct_run(spark: SparkSession, sf_dir: str):
     the kmeans-loop precedent) and every update ROUNDS IN SPARK before
     collection, so the trajectory is the exact one the broadcast-frame
     form walked; collected doubles re-embed as literals losslessly."""
-    from datapipeline_ops_spark.operators.dedup import persist_barrier, register_clear_hook
+    return memo(spark, "qct_run", sf_dir, lambda: _qct_train(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QCT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    register_clear_hook(_qct_memo_clear)
+
+def _qct_train(spark: SparkSession, sf_dir: str):
     d = load_table(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     words = tokens(F.trim(F.col("text")))
@@ -1154,7 +1145,7 @@ def _qct_run(spark: SparkSession, sf_dir: str):
             ).otherwise(F.lit(0.0)).alias("y"),
             (fixed_logit >= F.lit(0.0)).alias("fixed_pass"),
         ),
-        "qct_feats",
+        f"qct_feats:{sf_dir}",
     )
     ws: tuple = (0.0, 0.0, 0.0, 0.0, 0.0)  # (b, w1..w4), driver-held
     stage_vals = []
@@ -1219,9 +1210,7 @@ def _qct_run(spark: SparkSession, sf_dir: str):
         _dlit(ws[3]).alias("w3"),
         _dlit(ws[4]).alias("w4"),
     )
-    result = (feats, stage_rows, w_frame)
-    _QCT_MEMO[key] = result
-    return result
+    return feats, stage_rows, w_frame
 
 
 # NOTE (r15): a shared persisted scored-corpus frame for the three gate
@@ -1419,18 +1408,13 @@ def bpe_train_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# Session-scoped memo for the trained BPE loop: unlike the quality pair
-# (whose feats/aggs dedupe across queries via persist_barrier's
-# sameSemantics check), every _bpe_run_loop call builds fresh
-# localCheckpoint frames, so without a memo running bpe_train_loop then
-# bpe_vocab_apply pays the 8-merge loop twice. Keyed by (applicationId,
-# sf_dir) so a restarted session never sees stale checkpoint handles;
-# cleared by clear_barriers() so bench repeats stay cold.
-_BPE_LOOP_MEMO: dict = {}
-
-
-def _bpe_memo_clear() -> None:
-    _BPE_LOOP_MEMO.clear()
+# The trained BPE loop is memoized per (session, sf_dir) through
+# operators.dedup.memo: unlike the quality pair (whose feats/aggs dedupe
+# across queries via persist_barrier's sameSemantics check), every loop
+# run builds fresh localCheckpoint frames, so without the memo running
+# bpe_train_loop then bpe_vocab_apply pays the 8-merge loop twice.
+# Name kept for callers that reset the memo; it clears every barrier too.
+_bpe_memo_clear = clear_barriers
 
 
 # Adaptive strategy threshold (the CC_SMALL_GRAPH_EDGES precedent,
@@ -1514,13 +1498,10 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
     with columns token/n/nb/s/na, per-merge stats frames). Shared by
     bpe_train_loop and bpe_vocab_apply (memoized per session+dir — the
     apply query reuses the trained vocabulary instead of retraining)."""
-    from datapipeline_ops_spark.operators.dedup import register_clear_hook
+    return memo(spark, "bpe_run_loop", sf_dir, lambda: _bpe_train(spark, sf_dir))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_LOOP_MEMO.get(key)
-    if hit is not None:
-        return hit
-    register_clear_hook(_bpe_memo_clear)
+
+def _bpe_train(spark: SparkSession, sf_dir: str):
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(
@@ -1539,23 +1520,18 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
         )
     )
     v = vocab.localCheckpoint(eager=True)
-    # adaptive strategy: probe + collect are ONE bounded Arrow job over
-    # the already-checkpointed frame (r15, the r14 ADVICE item) —
-    # CollectLimit takes incrementally and the Arrow batch bounds driver
-    # memory by the cap's columnar bytes, never cap+1 Python Row objects.
-    # Under the cap the merge loop runs driver-local; above it the
-    # distributed checkpoint-flat loop below runs unchanged (the corpus
-    # pass is never re-derived either way).
-    head = v.limit(_BPE_DRIVER_VOCAB_CAP + 1).toArrow()
-    if head.num_rows <= _BPE_DRIVER_VOCAB_CAP:
-        result = _bpe_driver_loop(
+    # adaptive strategy: probe the already-checkpointed frame; under the
+    # cap the merge loop runs driver-local, above it the distributed
+    # checkpoint-flat loop below runs unchanged (the corpus pass is never
+    # re-derived either way)
+    head = bounded_collect(v, _BPE_DRIVER_VOCAB_CAP)
+    if head is not None:
+        return _bpe_driver_loop(
             spark,
             list(zip(head.column("token").to_pylist(),
                      head.column("n").to_pylist(),
                      head.column("s").to_pylist())),
         )
-        _BPE_LOOP_MEMO[key] = result
-        return result
     pair_structs = F.expr(
         "transform(sequence(1, size(s) - 1),"
         " i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))"
@@ -1614,7 +1590,6 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
                 "vocab_words_changed",
             )
         )
-    _BPE_LOOP_MEMO[key] = (v, out_rows)
     return v, out_rows
 
 
@@ -1954,8 +1929,6 @@ def trained_gate_feature_ablation(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: one corpus pass regardless of feature count; the unstack is a
     4-row driver-side shape, never a shuffle."""
-    from datapipeline_ops_spark.operators.dedup import persist_barrier
-
     feats, _, w_frame = _qct_run(spark, sf_dir)
     j = feats.crossJoin(F.broadcast(w_frame))
     terms = {
@@ -2092,8 +2065,6 @@ def minibatch_sgd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted table — at cluster scale, partition the feature table BY
     the batch key at build time and each step reads exactly one
     partition (the classic epoch-shuffle layout)."""
-    from datapipeline_ops_spark.operators.dedup import persist_barrier
-
     d = load_table(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     words = tokens(F.trim(F.col("text")))

@@ -108,12 +108,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view for spark.sql() queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Driver-local rows -> a SINGLE-SLICE DataFrame.
 
